@@ -88,10 +88,18 @@ class scoped_persists:
         return self
 
     def __exit__(self, *exc) -> None:
+        # every frame is released even if one unpersist fails; the
+        # first failure is re-raised after the loop
         scoped = _PERSIST_REGISTRY[self._mark:]
         del _PERSIST_REGISTRY[self._mark:]
+        first = None
         for df in scoped:
-            df.unpersist()
+            try:
+                df.unpersist()
+            except Exception as e:
+                first = first or e
+        if first is not None:
+            raise first
 
 
 def h32(col: Column) -> Column:

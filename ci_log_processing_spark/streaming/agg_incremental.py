@@ -5,19 +5,16 @@ batch-scoped MERGEABLE PARTIALS, folded on read — merge_agg_deltas
 The reference recomputes its monitoring gauges from scratch every
 scraper pass (logscraper.py:295-304); the streaming statement of
 "aggregates as state" is: each micro-batch writes ITS OWN partial
-aggregate to `agg/b<batch_id>/` in OVERWRITE mode, and the served
-rollup is the monoid fold of all partials. Nothing is ever updated
-in place, so there is no read-modify-write race and no transactional
-table requirement.
+aggregate under `agg/` (streaming/partials.py has the layout and
+replay contract), and the served rollup is the monoid fold of all
+partials.
 
-Replay safety (foreachBatch is at-least-once): a replayed batch
-recomputes the identical partial — the file source's checkpointed
-offsets pin its input set — and the overwrite REPLACES the previous
-attempt's directory instead of double-counting beside it. This is
-the same batch-scoped-overwrite idempotence contract as
-ingest_curate.py, with one simplification: a partial aggregate has
-no cross-batch read dependency at write time (contrast the dedup
-index), so there is nothing to exclude on replay.
+Merge algebra: counts are LINEAR and sum-merge. '+' is not
+idempotent, so replay safety is the overwrite: a replayed batch
+recomputes the identical partial and REPLACES the previous attempt's
+instead of double-counting beside it. A partial aggregate has no
+cross-batch read at write time, so there is nothing to exclude on
+replay.
 
 Scale shape per batch: one partial-aggregated count shuffle whose
 volume is the batch's distinct keys. The fold on read is
@@ -36,8 +33,10 @@ from pyspark.sql import functions as F
 
 from ..plans.pipeline import parse_transcripts
 from .follow import TRANSCRIPT_SCHEMA
+from .partials import drain, hadoop_fs, read_partials, write_partial
 
 _KEYS = ["severity", "window_start"]
+_SCHEMA = "severity string, window_start timestamp, cnt long"
 
 
 def _partial(df: DataFrame) -> DataFrame:
@@ -55,10 +54,7 @@ def read_rollup(spark: SparkSession, agg_dir: str) -> DataFrame:
     """The served rollup: fold every batch partial through the
     monoid merge. Union of partial-sized inputs + one group-keyed
     exchange — never touches row-level data."""
-    parts = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(agg_dir)
-    )
+    parts = read_partials(spark, agg_dir, _SCHEMA)
     return parts.groupBy(*_KEYS).agg(F.sum("cnt").alias("cnt"))
 
 
@@ -70,18 +66,13 @@ def compact_partials(spark: SparkSession, agg_dir: str) -> None:
     this under a metastore swap (the checkpoint.py expire pattern);
     here it documents the maintenance shape."""
     merged = read_rollup(spark, agg_dir).collect()
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(agg_dir)
-    fs = path.getFileSystem(conf)
+    fs, Path = hadoop_fs(spark, agg_dir)
     old = [
         st.getPath()
-        for st in fs.listStatus(path)
+        for st in fs.listStatus(Path(agg_dir))
         if st.isDirectory() and st.getPath().getName() != "b_compact"
     ]
-    spark.createDataFrame(
-        merged, "severity string, window_start timestamp, cnt long"
-    ).write.mode("overwrite").parquet(
+    spark.createDataFrame(merged, _SCHEMA).write.mode("overwrite").parquet(
         os.path.join(agg_dir, "b_compact")
     )
     for p in old:
@@ -101,20 +92,10 @@ def run_agg_maintenance(
     agg_dir = os.path.join(out_dir, "agg")
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        _partial(batch).write.mode("overwrite").parquet(
-            os.path.join(agg_dir, f"b{batch_id}")
-        )
+        write_partial(_partial(batch), agg_dir, batch_id)
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(transcripts_dir)
+    drain(
+        spark, TRANSCRIPT_SCHEMA, transcripts_dir,
+        os.path.join(out_dir, "chk"), _process, max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", os.path.join(out_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return read_rollup(spark, agg_dir)

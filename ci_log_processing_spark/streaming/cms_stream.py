@@ -2,24 +2,19 @@
 frequency twin of hll_stream.py's cardinality sketch.
 
 Per micro-batch (foreachBatch, availableNow): reduce the batch to its
-exact per-token counts AND its CMS cell partials, and write BOTH to
-batch-addressed subdirectories (`counts/b{batch_id}`,
-`cells/b{batch_id}`, mode overwrite). The final answer merges all
-partials: token counts sum, cells sum, then the shared
-curation.cms_estimate finish (heap top-k + min-over-depth-cells).
+exact per-token counts AND its CMS cell partials, written as two
+batch-addressed partials under `counts/` and `cells/`
+(streaming/partials.py has the layout and replay contract). The
+final answer merges all partials: token counts sum, cells sum, then
+the shared curation.cms_estimate finish (heap top-k +
+min-over-depth-cells).
 
-The algebra contrast with the HLL stream is the point of keeping
-both in the engine:
-
-* HLL registers are max-merged — max is IDEMPOTENT, so a replayed
-  batch is absorbed even if it double-writes.
-* CMS cells (and exact counts) are LINEAR — '+' merges partials
-  exactly (that linearity is WHY the streamed sketch equals the
-  single-pass batch sketch bit-for-bit), but '+' is NOT idempotent,
-  so replay safety must come from bookkeeping instead: each batch
-  OVERWRITES its own addressed subdirectory, and a replayed batch
-  replaces rather than duplicates its contribution (the
-  ingest_curate.py pattern).
+Merge algebra: CMS cells (and exact counts) are LINEAR — '+' merges
+partials exactly, which is WHY the streamed sketch equals the
+single-pass batch sketch bit-for-bit. '+' is NOT idempotent (the
+contrast with hll_stream's max-merge), so replay safety comes from
+the overwrite alone: a replayed batch replaces its own partial
+rather than adding a second copy.
 
 State: ZERO rows in the streaming state store; the per-batch partial
 is <= (distinct tokens in batch) + depth*width rows in the sink. At
@@ -44,6 +39,7 @@ from pyspark.sql import functions as F
 from ..operators.curation import cms_cell_array, cms_estimate
 from ..operators.dedup import tokens_col
 from .neardup_ingest import DOC_STREAM_SCHEMA
+from .partials import drain, read_partials, write_partial
 
 
 def run_streaming_cms(
@@ -65,8 +61,6 @@ def run_streaming_cms(
     cells = cms_cell_array(width, depth, seed)
 
     def process_batch(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
         toks = batch_df.select(
             F.explode(tokens_col(F.col("text"))).alias("token")
         ).filter(F.col("token") != "")
@@ -77,50 +71,31 @@ def run_streaming_cms(
         # corpus-sized, so a plain in-batch persist is safe
         exact.persist()
         try:
-            exact.write.mode("overwrite").parquet(
-                os.path.join(counts_dir, f"b{batch_id}")
-            )
-            (
+            write_partial(exact, counts_dir, batch_id)
+            write_partial(
                 exact.select(
                     "exact_n", F.posexplode(cells).alias("i", "cell")
                 )
                 .groupBy("i", "cell")
-                .agg(F.sum("exact_n").alias("cell_n"))
-                .write.mode("overwrite")
-                .parquet(os.path.join(cells_dir, f"b{batch_id}"))
+                .agg(F.sum("exact_n").alias("cell_n")),
+                cells_dir,
+                batch_id,
             )
         finally:
             exact.unpersist()
 
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    drain(
+        spark, DOC_STREAM_SCHEMA, docs_dir,
+        os.path.join(output_dir, "_stream_ckpt"), process_batch,
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option(
-            "checkpointLocation", os.path.join(output_dir, "_stream_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    def _parts(d: str) -> list[str]:
-        return [
-            os.path.join(d, b)
-            for b in sorted(os.listdir(d))
-            if b.startswith("b")
-        ]
-
     exact = (
-        spark.read.parquet(*_parts(counts_dir))
+        read_partials(spark, counts_dir, "token string, exact_n long")
         .groupBy("token")
         .agg(F.sum("exact_n").alias("exact_n"))
     )
     sketch = (
-        spark.read.parquet(*_parts(cells_dir))
+        read_partials(spark, cells_dir, "i int, cell int, cell_n long")
         .groupBy("i", "cell")
         .agg(F.sum("cell_n").alias("cell_n"))
     )

@@ -7,25 +7,23 @@ reference snapshot with exactly the batch operator's math
 
 Per micro-batch (foreachBatch, availableNow): the batch's embeddings
 posexplode to (label, dim) cells and reduce to per-cell partials
-(sum of values + row count) written to a batch-addressed
-subdirectory (`dims/b{batch_id}`, mode overwrite). The final answer
-sum-merges all partials into the streamed snapshot's per-dim sums,
-derives the reference side's identical partials batch-side, and
-finishes with the same centroid cosine / L2 / round-5 arithmetic as
+(sum of values + row count) under `dims/` (streaming/partials.py has
+the layout and replay contract). The final answer sum-merges all
+partials into the streamed snapshot's per-dim sums, derives the
+reference side's identical partials batch-side, and finishes with
+the same centroid cosine / L2 / round-5 arithmetic as
 snapshot_drift — so the streamed result hash-equals the single-pass
 batch operator over the union of all batches (the gate splits the
-stream side across two micro-batches and compares against the
-SAME DuckDB twin sim_snapshot_drift uses).
+stream side across two micro-batches and compares against the SAME
+DuckDB twin sim_snapshot_drift uses).
 
-Algebra and replay: per-dim sums and counts are LINEAR — '+' merges
+Merge algebra: per-dim sums and counts are LINEAR — '+' merges
 partials exactly, which is why the streamed centroid equals the
 single-pass one (up to float reassociation, absorbed by the tier's
 round-5 convention exactly as the batch op absorbs Spark-vs-DuckDB
-summation order) — but '+' is NOT idempotent, so replay safety comes
-from bookkeeping: each batch OVERWRITES its own addressed
-subdirectory and a replayed batch replaces rather than doubles its
-contribution (the cms_stream/ingest_curate pattern, the documented
-contrast with hll_stream's idempotent max-merge).
+summation order). '+' is NOT idempotent, so replay safety comes from
+the overwrite: a replayed batch replaces rather than doubles its
+contribution.
 
 State: ZERO rows in the streaming state store; each batch's partial
 is <= labels x dim rows (KB-sized at ANY corpus size — the same
@@ -38,6 +36,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .partials import drain, read_partials, write_partial
 
 EMB_STREAM_SCHEMA = "vec_id long, label int, embedding array<float>"
 
@@ -78,34 +78,17 @@ def run_streaming_drift(
     dims_dir = os.path.join(output_dir, "dims")
 
     def process_batch(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        _dim_partials(batch_df).write.mode("overwrite").parquet(
-            os.path.join(dims_dir, f"b{batch_id}")
-        )
+        write_partial(_dim_partials(batch_df), dims_dir, batch_id)
 
-    stream = (
-        spark.readStream.schema(EMB_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(emb_dir)
+    drain(
+        spark, EMB_STREAM_SCHEMA, emb_dir,
+        os.path.join(output_dir, "_stream_ckpt"), process_batch,
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option(
-            "checkpointLocation", os.path.join(output_dir, "_stream_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    parts = [
-        os.path.join(dims_dir, b)
-        for b in sorted(os.listdir(dims_dir))
-        if b.startswith("b")
-    ]
     b_dims = (
-        spark.read.parquet(*parts)
+        read_partials(
+            spark, dims_dir, "label int, _pos int, sv double, n long"
+        )
         .groupBy("label", "_pos")
         .agg(F.sum("sv").alias("sb"), F.sum("n").alias("nb"))
     )

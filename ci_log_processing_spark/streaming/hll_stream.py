@@ -5,21 +5,19 @@ fits in state.
 
 Per micro-batch: run the batch pipeline (foreachBatch, same
 rationale as follow.py — the ffill window is conversation-ordered
-and a conversation's turns arrive together), reduce the batch to
-its (sink, j, mj) register PARTIALS, and write them to a
-batch-addressed subdirectory (`registers/b{batch_id}`, mode
-overwrite). The estimate is computed from the union of all partial
-files.
+and a conversation's turns arrive together) and reduce the batch to
+its (sink, j, mj) register partial under `registers/`
+(streaming/partials.py has the layout and replay contract). The
+estimate is computed from the max-merge of all partials.
 
-Crash/replay safety comes from the algebra, not bookkeeping:
-register max() is associative, commutative and IDEMPOTENT, so a
-replayed batch overwriting (or even double-writing) its partials
-cannot change the merged registers — unlike a count, a re-added
-partial is absorbed, never double-counted. This is the property
-that makes HLL the production answer for streaming cardinality
-(merge across micro-batches, days, or datacenters with no
-coordination), and the gate proves it: the streamed estimate is
-hash-equal to the single-pass batch sketch over the same rows.
+Merge algebra: register max() is associative, commutative and
+IDEMPOTENT, so a replayed batch cannot change the merged registers
+even if it double-writes — a re-added partial is absorbed, never
+double-counted. This is the property that makes HLL the production
+answer for streaming cardinality (merge across micro-batches, days,
+or datacenters with no coordination), and the gate proves it: the
+streamed estimate is hash-equal to the single-pass batch sketch over
+the same rows.
 
 State: ZERO rows in the streaming state store — the sketch lives in
 the sink as <= 64 rows per (sink, batch). At 10^12 turns the
@@ -36,6 +34,9 @@ from pyspark.sql import functions as F
 from ..operators.aggregate import hll_estimate, hll_partial_registers
 from ..plans.pipeline import DEFAULT_BATCH_TS, DEFAULT_REF_YEAR, full_pipeline
 from .follow import TRANSCRIPT_SCHEMA
+from .partials import drain, read_partials, write_partial
+
+_REGISTERS_SCHEMA = "sink string, j long, mj int"
 
 
 def run_streaming_hll(
@@ -53,37 +54,17 @@ def run_streaming_hll(
     regs_dir = os.path.join(output_dir, "registers")
 
     def process_batch(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
         routed = full_pipeline(
             batch_df, spark, batch_ts=batch_ts, ref_year=ref_year, meta=meta
         )
-        # overwrite the batch's own subdir: a replayed batch lands in
-        # the same place, and max-merge absorbs it either way
-        hll_partial_registers(routed).write.mode("overwrite").parquet(
-            os.path.join(regs_dir, f"b{batch_id}")
-        )
+        write_partial(hll_partial_registers(routed), regs_dir, batch_id)
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(transcripts_dir)
+    drain(
+        spark, TRANSCRIPT_SCHEMA, transcripts_dir,
+        os.path.join(output_dir, "_stream_ckpt"), process_batch,
+        max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option(
-            "checkpointLocation", os.path.join(output_dir, "_stream_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    parts = [
-        os.path.join(regs_dir, d)
-        for d in sorted(os.listdir(regs_dir))
-        if d.startswith("b")
-    ]
-    partials = spark.read.parquet(*parts)
+    partials = read_partials(spark, regs_dir, _REGISTERS_SCHEMA)
     return hll_estimate(partials).select(
         "sink", F.col("hll_distinct").cast("double").alias("hll_distinct")
     )

@@ -1,27 +1,19 @@
 """Streaming inverted-index maintenance: each micro-batch writes ITS
-OWN posting-grain partial to `index/b<batch_id>/`, and the served
-index is finalize_index over the union of all partials —
+OWN posting-grain partial under `index/` (streaming/partials.py has
+the layout and replay contract), and the served index is
+finalize_index over the union of all partials —
 retrieval.merge_posting_rows lifted to the stream tier.
 
-This completes the batch-scoped-partial algebra triple the streaming
-tier documents (each op states WHY its merge is replay-safe):
-
-  * hll_stream     — idempotent MAX-merge (replay is free);
-  * cms_stream / drift_stream / agg_incremental — LINEAR sum-merge
-    (replay safety from batch-addressed overwrite);
-  * THIS — DISJOINT-UNION merge: posting rows are keyed (term,
-    doc_id) with doc-LOCAL positions, the file source's checkpointed
-    offsets make batches doc-disjoint, so partials never overlap and
-    the fold is plain union (no re-aggregation of overlapping cells
-    at all). Replay safety is still batch-addressed overwrite: a
-    replayed batch recomputes the identical posting rows and
-    REPLACES its own directory.
-
-Unlike ingest_curate's dedup index there is no cross-batch READ at
-write time (a batch's postings don't depend on what is already
-indexed), so there is nothing to exclude on replay — the simple end
-of the spectrum, stated so the contrast with the dedup gate's
-b<batch_id> exclusion is explicit.
+Merge algebra: DISJOINT UNION. Posting rows are keyed (term, doc_id)
+with doc-LOCAL positions, and the file source's checkpointed offsets
+make batches doc-disjoint, so partials never overlap and the fold is
+plain union (no re-aggregation of overlapping cells at all) — the
+third algebra next to hll_stream's idempotent max and the linear
+sums of cms/drift/agg_incremental. Union is not idempotent, so
+replay safety is the overwrite: a replayed batch recomputes the
+identical posting rows and REPLACES its own partial. A batch's
+postings don't depend on what is already indexed, so there is no
+cross-batch read at write time.
 
 Scale shape per batch: posting_rows' zero-shuffle posexplode + one
 (term, doc)-keyed partial+final aggregate over the BATCH, never the
@@ -38,8 +30,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.retrieval import finalize_index, posting_rows
+from .partials import drain, read_partials, write_partial
 
 INDEX_STREAM_SCHEMA = "doc_id long, text string"
+
+_POSTING_SCHEMA = (
+    "term string, doc_id long, _plist array<int>, _n_occ long"
+)
 
 
 def read_index(
@@ -51,11 +48,7 @@ def read_index(
     """The served index: finalize over the union of batch partials.
     Doc-disjoint batches make the union itself the merge — the df
     band and posting serialization run on the folded grain."""
-    td = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(index_dir)
-        .select("term", "doc_id", "_plist", "_n_occ")
-    )
+    td = read_partials(spark, index_dir, _POSTING_SCHEMA)
     return finalize_index(td, min_df=min_df, max_df=max_df)
 
 
@@ -68,28 +61,17 @@ def run_index_maintenance(
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `docs_dir` (availableNow); each micro-batch writes its
-    posting-grain partial to <out>/index/b<batch_id> (overwrite —
-    the batch-addressed replay contract). Returns the served index,
-    which must hash-equal the ONE-PASS inverted_index over the same
-    documents (the gate's oracle): the disjoint-union identity
-    finalize(rows(b0) ∪ rows(b1) ∪ ...) == index(all)."""
+    posting-grain partial to <out>/index/b<batch_id>. Returns the
+    served index, which must hash-equal the ONE-PASS inverted_index
+    over the same documents (the gate's oracle): the disjoint-union
+    identity finalize(rows(b0) ∪ rows(b1) ∪ ...) == index(all)."""
     index_dir = os.path.join(out_dir, "index")
 
     def _process(batch: DataFrame, batch_id: int) -> None:
-        posting_rows(batch).write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"b{batch_id}")
-        )
+        write_partial(posting_rows(batch), index_dir, batch_id)
 
-    stream = (
-        spark.readStream.schema(INDEX_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    drain(
+        spark, INDEX_STREAM_SCHEMA, docs_dir, os.path.join(out_dir, "chk"),
+        _process, max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", os.path.join(out_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return read_index(spark, index_dir, min_df=min_df, max_df=max_df)

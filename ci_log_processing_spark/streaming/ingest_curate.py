@@ -14,23 +14,20 @@ the batch-tier operators on (quality_scores + incremental_dedup),
 with the streaming engine still providing source tracking, trigger
 scheduling, and checkpointed progress.
 
-Failure semantics, stated exactly: foreachBatch is at-least-once —
-a batch may replay after a crash mid-write. Two independent appends
-(corpus, then index) would break under replay in BOTH orders: crash
-between them re-admits the batch's docs (duplicate corpus rows) or
-loses them (hashes committed, docs absent). So each batch writes to
-BATCH-SCOPED directories in OVERWRITE mode (`b<batch_id>/` under
-corpus and index): the file source replays a failed batch with the
-identical file set (its offsets are checkpointed before _process
-runs), the anti-join reads the index WITH the batch's own
-b<batch_id>/ subdirectory excluded (a failed attempt may have left
-its hashes there; including them would empty the survivor set and
-the overwrite would destroy the docs) — so the replay sees exactly
-the pre-batch index, re-derives the identical survivor set, and the
-overwrite replaces any partial output instead of appending beside
-it. Batch-level idempotence from plain parquet,
-no transactional table needed (Iceberg/Delta would collapse this to
-a snapshot commit).
+Merge algebra: the corpus and the hash index are DISJOINT unions of
+batch partials under `corpus/` and `index/` (streaming/partials.py
+has the layout and replay contract). Two independent appends would
+break under at-least-once replay in BOTH orders: a crash between
+them re-admits the batch's docs (duplicate corpus rows) or loses
+them (hashes committed, docs absent). Instead each batch overwrites
+its own two partials, and the anti-join reads only the index
+partials of EARLIER batches — the pre-batch index. A failed attempt
+may have left its own hashes; reading them would empty the survivor
+set and the overwrite would destroy the docs. So the replay
+re-derives the identical survivor set and replaces any partial
+output: batch-level idempotence from plain parquet, no
+transactional table needed (Iceberg/Delta would collapse this to a
+snapshot commit).
 
 Scale shape per batch: quality gate is per-row (zero shuffle);
 incremental_dedup is one intra-batch window + one anti-join whose
@@ -45,50 +42,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+
+from .partials import drain, read_partials, write_partial
 
 DOC_STREAM_SCHEMA = "doc_id long, text string, event_ts timestamp"
 
-_INDEX_SCHEMA = StructType([StructField("h", StringType())])
-
-
-def _known_hashes(
-    spark: SparkSession, index_dir: str, batch_id: int
-) -> DataFrame:
-    """The persisted content-hash index; empty on first batch. The
-    directory listing goes through the Hadoop FS API so it works on
-    object stores, not just local paths (and avoids the noisy
-    AnalysisException a read-then-catch would log).
-
-    CRITICAL for replay correctness: the current batch's own
-    `b<batch_id>/` subdirectory is EXCLUDED. A crash after this
-    batch's index write but before the streaming commit leaves its
-    hashes on disk; on replay, reading them back would make the
-    anti-join treat the batch's own docs as already-known, empty the
-    survivor set, and let the corpus overwrite delete the
-    previously-written rows — permanent loss (hashes present, docs
-    absent). Excluding b<batch_id> makes the replay see exactly the
-    pre-batch index, re-derive the identical survivor set, and
-    overwrite the partial output with it."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(index_dir)
-    fs = path.getFileSystem(conf)
-    if not fs.exists(path):
-        return spark.createDataFrame([], _INDEX_SCHEMA)
-    own = f"b{batch_id}"
-    prior = [
-        st.getPath().toString()
-        for st in fs.listStatus(path)
-        if st.isDirectory() and st.getPath().getName() != own
-    ]
-    if not prior:
-        return spark.createDataFrame([], _INDEX_SCHEMA)
-    return (
-        spark.read.schema(_INDEX_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(*prior)
-    )
+_CORPUS_SCHEMA = (
+    "h string, doc_id long, text string, event_ts timestamp, "
+    "quality double"
+)
 
 
 def run_ingest_curation(
@@ -114,36 +76,21 @@ def run_ingest_curation(
         ).filter(F.col("quality") >= min_quality)
         fresh = incremental_dedup(
             scored.select("doc_id", "text", "event_ts", "quality"),
-            _known_hashes(batch.sparkSession, index_dir, batch_id),
+            read_partials(
+                batch.sparkSession, index_dir, "h string", before=batch_id
+            ),
         )
         # persist ONCE so corpus and index writes share the compute;
-        # released before the batch returns. Batch-scoped OVERWRITE
-        # dirs make a replayed batch replace its own partial output
-        # (see module docstring) instead of appending duplicates.
+        # released before the batch returns
         fresh.persist()
         try:
-            fresh.write.mode("overwrite").parquet(
-                os.path.join(corpus_dir, f"b{batch_id}")
-            )
-            fresh.select("h").write.mode("overwrite").parquet(
-                os.path.join(index_dir, f"b{batch_id}")
-            )
+            write_partial(fresh, corpus_dir, batch_id)
+            write_partial(fresh.select("h"), index_dir, batch_id)
         finally:
             fresh.unpersist()
 
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    drain(
+        spark, DOC_STREAM_SCHEMA, docs_dir, os.path.join(out_dir, "chk"),
+        _process, max_files_per_trigger,
     )
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", os.path.join(out_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(corpus_dir)
-    )
+    return read_partials(spark, corpus_dir, _CORPUS_SCHEMA)

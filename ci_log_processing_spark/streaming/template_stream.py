@@ -5,14 +5,14 @@ log_templates miner (operators/aggregate.py).
 
 Per micro-batch (foreachBatch, availableNow): mask + aggregate the
 batch's VISIBLE turns to (template, n_msgs, n_convs, example) with
-the batch id attached, and OVERWRITE the batch-addressed
-subdirectory `tmpl/b{batch_id}` — the linear-merge replay-safety
-pattern shared with cms_stream.py/drift_stream.py: counts are
-summed, sum is not idempotent, so a replayed batch must REPLACE its
-contribution, not add to it.
+the batch id attached, written as the batch's partial under `tmpl/`
+(streaming/partials.py has the layout and replay contract).
 
-Merge legality is the design constraint the CALLER owns: n_msgs,
-min(example) and min(first_batch) merge linearly for any batch
+Merge algebra: n_msgs and n_convs sum, example and first_batch take
+the min. min is idempotent; sum is not, so replay safety comes from
+the overwrite — a replayed batch REPLACES its contribution. Merge
+legality is the design constraint the CALLER owns: n_msgs,
+min(example) and min(first_batch) merge correctly for any batch
 split, but n_convs sums correctly only when each conversation lands
 wholly inside one batch (the deployment reality — a follow-loop
 ships whole conversation logs; the gate splits waves by conv hash
@@ -33,8 +33,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .partials import drain, read_partials, write_partial
+
 TURN_STREAM_SCHEMA = (
     "conv_id string, turn_idx int, message string, sink string"
+)
+
+_TEMPLATE_SCHEMA = (
+    "template string, n_msgs long, n_convs long, example string, "
+    "first_batch long"
 )
 
 
@@ -73,34 +80,17 @@ def run_streaming_templates(
     tmpl_dir = os.path.join(output_dir, "tmpl")
 
     def process_batch(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        _template_partial(batch_df, batch_id).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(tmpl_dir, f"b{batch_id}"))
-
-    stream = (
-        spark.readStream.schema(TURN_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(turns_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option(
-            "checkpointLocation", os.path.join(output_dir, "_stream_ckpt")
+        write_partial(
+            _template_partial(batch_df, batch_id), tmpl_dir, batch_id
         )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
-    parts = [
-        os.path.join(tmpl_dir, b)
-        for b in sorted(os.listdir(tmpl_dir))
-        if b.startswith("b")
-    ]
+    drain(
+        spark, TURN_STREAM_SCHEMA, turns_dir,
+        os.path.join(output_dir, "_stream_ckpt"), process_batch,
+        max_files_per_trigger,
+    )
     return (
-        spark.read.parquet(*parts)
+        read_partials(spark, tmpl_dir, _TEMPLATE_SCHEMA)
         .groupBy("template")
         .agg(
             F.sum("n_msgs").alias("n_msgs"),

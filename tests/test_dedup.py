@@ -399,3 +399,36 @@ def test_scoped_persists_back_to_back_composition(spark, corpus):
     except RuntimeError:
         pass
     assert len(_PERSIST_REGISTRY) == 0
+
+
+def test_scoped_persists_releases_all_when_one_unpersist_fails():
+    """One failing unpersist must not leak the rest of the scope: every
+    frame is still released, then the first error is re-raised."""
+    from ci_log_processing_spark.operators.dedup import (
+        _PERSIST_REGISTRY,
+        _register_persist,
+        release_persisted,
+        scoped_persists,
+    )
+
+    class Stub:
+        def __init__(self, i, fails):
+            self.i, self.fails = i, fails
+            self.released = False
+
+        def persist(self):
+            return self
+
+        def unpersist(self):
+            self.released = True
+            if self.fails:
+                raise RuntimeError(f"unpersist {self.i} failed")
+
+    release_persisted()
+    stubs = [Stub(i, fails=i % 2 == 1) for i in range(4)]
+    with pytest.raises(RuntimeError, match="unpersist 1 failed"):
+        with scoped_persists():
+            for s in stubs:
+                _register_persist(s)
+    assert all(s.released for s in stubs)
+    assert len(_PERSIST_REGISTRY) == 0

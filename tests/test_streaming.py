@@ -4,6 +4,7 @@ micro-batched run of the same logic (logsender.py:683-687)."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from ci_log_processing_spark.plans.pipeline import full_pipeline
@@ -503,11 +504,16 @@ def test_streaming_hll_equals_batch_sketch(spark, tmp_path):
     assert len(streamed) >= 3
 
 
-def test_streaming_hdr_bridges_gaps_across_idle_batches(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["path", "file_uri"])
+def test_streaming_hdr_bridges_gaps_across_idle_batches(
+    spark, tmp_path, scheme
+):
     """Three waves; conv X appears in waves 0 and 2 only. The bridge
     gap for X must come from wave 0's persisted state surviving the
     idle middle batch (latest-per-conv = max batch id), and the
-    merged sketch must equal the single-pass batch operator."""
+    merged sketch must equal the single-pass batch operator — also
+    when the output dir is a URI (`scheme`), where a local-path
+    listing of the state would silently drop the bridge gaps."""
     import os as _os
     import shutil as _shutil
     from datetime import datetime
@@ -552,8 +558,8 @@ def test_streaming_hdr_bridges_gaps_across_idle_batches(spark, tmp_path):
     streamed = {
         r["sink"]: r.asDict()
         for r in run_streaming_hdr(
-            spark, str(in_dir), str(tmp_path / "out"), sub_bits=4,
-            meta=meta,
+            spark, str(in_dir), scheme + str(tmp_path / "out"),
+            sub_bits=4, meta=meta,
         ).collect()
     }
     allrows = spark.createDataFrame(sum(waves, []), schema)

@@ -56,8 +56,9 @@ def main():
 
     # get_spark now pins spark.sql.ansi.enabled=true — the same
     # strict mode the grading driver runs — so no override is needed
-    # here; the gate and the job share one session config.
-    spark = get_spark(master="local[8]")
+    # here; the gate and the job share one session config, including
+    # the default master local[$SPARK_GRAFT_CPUS].
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
