@@ -9,11 +9,13 @@ Usage (local or cluster — only master/size differ):
       --input-dir /root/testdata/sf0.001 \
       --output-dir /tmp/clp_out \
       [--batch-ts "2024-01-01 00:00:00"] [--ref-year 2024] \
-      [--impl native|pandas] [--no-skip-debug]
+      [--impl native|pandas] [--no-skip-debug] [--no-write]
 
-Writes:
-  <out>/sinks/<sink>/         per-sink parquet (Iceberg-analog
-                              tables, partitioned by sink date)
+Writes (write_batch; streaming/follow.py writes the same per
+micro-batch):
+  <out>/sinks/sink=<s>/event_date=<d>/
+                              per-sink parquet (Iceberg-analog
+                              table, partitioned by sink and date)
   <out>/agg_hourly/           per-sink windowed counts
   <out>/checkpoint/           processed conv manifest (resume via
                               left-anti join on next run)
@@ -29,6 +31,96 @@ import sys
 import time
 
 
+def write_batch(spark, routed, output_dir: str, batch_id: str):
+    """Fan out `routed` (full_pipeline output) into `<out>/sinks` as
+    batch `batch_id`, then post-write: hourly aggregate, lineage
+    metrics, checkpoint, per-sink counts.
+
+    Returns (rows, per-sink counts, {"fanout_write_sec",
+    "post_write_sec"}).
+    """
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from ..operators.aggregate import hourly_agg, sink_counts
+    from ..operators.checkpoint import write_checkpoint
+    from ..sinks import ParquetDirSink
+
+    # The reference routes per file into 3 indices inside one pass
+    # (send_to_es, logsender.py:474-489). Spark translation that
+    # survives scale: ONE write job with partitionBy(sink, event_date)
+    # — a single shuffle keyed on the table partition scheme, files
+    # track (sink x date) not tasks x dates, and no wide-row cache is
+    # ever built (persisting the parsed DF measured 2x the cost of
+    # writing it). Aggregates/metrics/checkpoint then run over the
+    # just-written columnar data with sink/date pruning for free.
+    # Writes are APPEND-mode batches tagged with batch_id; the conv
+    # checkpoint makes re-runs skip processed convs (at-least-once
+    # like the reference's remove-dir-on-success, logsender.py:550-560;
+    # a real Iceberg sink upgrades this to exactly-once snapshots).
+    sinks_dir = os.path.join(output_dir, "sinks")
+    routed = (
+        routed.withColumn("src_partition", F.spark_partition_id())
+        .withColumn("batch_id", F.lit(batch_id))
+        .withColumn("event_date", F.to_date("filled_ts"))
+        # sink docs keep `message`, not the raw line (the reference's
+        # ES documents likewise store the split message, doc_iter
+        # logsender.py:416-428); dropping text+ts cuts the fan-out
+        # exchange + file bytes ~40%. prior_ts_count is routing
+        # scratch — never a sink column.
+        .drop("text", "ts", "prior_ts_count")
+    )
+    counts = {}
+    # Row count of THIS write comes from an Observation on the write
+    # job itself — no separate count pass over the anti-joined input.
+    # A fully-checkpointed input observes 0 rows and must stay a
+    # no-op: in particular it must NOT re-read this batch_id's
+    # previous rows and re-append aggregates.
+    obs = Observation("routed_rows")
+    phases = {}
+    t_w = time.time()
+    # one exchange keyed on the table partition scheme: the fastest
+    # fan-out measured (BASELINE.md; a conv-hash salt and a
+    # sort-free exchange-less write both lost)
+    w = routed.observe(obs, F.count(F.lit(1)).alias("n")).repartition(
+        F.col("sink"), F.col("event_date")
+    )
+    # sink DDL seam (sinks.TableSink): ParquetDirSink here; a real
+    # Iceberg catalog slots in as IcebergTableSink without touching
+    # the plan (create_indices analog, logsender.py:563-618)
+    table = ParquetDirSink(sinks_dir)
+    table.ensure(spark)
+    table.append(w)
+    n_rows = obs.get["n"]
+    phases["fanout_write_sec"] = round(time.time() - t_w, 2)
+    t_w = time.time()
+    if n_rows > 0:
+        written = spark.read.parquet(sinks_dir).filter(
+            F.col("batch_id") == batch_id
+        )
+        hourly_agg(written).withColumn(
+            "batch_id", F.lit(batch_id)
+        ).write.mode("append").parquet(
+            os.path.join(output_dir, "agg_hourly")
+        )
+        # per-partition lineage/throughput metrics
+        # (reference analog: Prometheus per-job gauges,
+        # logscraper.py:295-304)
+        metrics = written.groupBy("src_partition", "sink").agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.countDistinct("conv_id").alias("convs"),
+        )
+        metrics.withColumn("batch_id", F.lit(batch_id)).write.mode(
+            "append"
+        ).parquet(os.path.join(output_dir, "metrics"))
+        write_checkpoint(written, os.path.join(output_dir, "checkpoint"))
+        counts = {
+            r["sink"]: r["cnt"] for r in sink_counts(written).collect()
+        }
+    phases["post_write_sec"] = round(time.time() - t_w, 2)
+    return n_rows, counts, phases
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser()
     ap.add_argument("--input-dir", required=True)
@@ -41,25 +133,6 @@ def main(argv=None):
     # --impl pandas stays as the mandated-path parity option.
     ap.add_argument("--impl", choices=["native", "pandas"], default="native")
     ap.add_argument("--no-skip-debug", action="store_true")
-    # fan-out write strategy (measured in BASELINE.md):
-    #   repartition — one exchange keyed on the table partition scheme;
-    #     cleanest file layout (files track sink x date), but write
-    #     parallelism collapses to the number of distinct
-    #     (sink, date) combos — a skew/straggler risk at scale;
-    #   salted — same exchange plus a conv-hash salt: file layout
-    #     stays (sink x date x salt) while write parallelism is
-    #     combos x salt, removing the one-task-per-date straggler;
-    #   direct — NO exchange: write straight from the pipeline's
-    #     conv-keyed distribution with
-    #     spark.sql.maxConcurrentOutputFileWriters keeping up to N
-    #     partition writers open per task (sort-free dynamic write);
-    #     fewest shuffles, most output files.
-    ap.add_argument(
-        "--write-strategy",
-        choices=["repartition", "salted", "direct"],
-        default="repartition",
-    )
-    ap.add_argument("--write-salt", type=int, default=8)
     ap.add_argument("--no-write", action="store_true",
                     help="run parse->enrich->route and count per-sink "
                          "rows without writing sinks (isolates engine "
@@ -75,11 +148,10 @@ def main(argv=None):
 
     from pyspark.sql import functions as F
 
-    from ..session import get_spark
+    from ..session import get_spark, hadoop_fs
     from ..sources.transcripts import load_transcripts
     from .pipeline import full_pipeline
-    from ..operators.aggregate import hourly_agg, sink_counts
-    from ..operators.checkpoint import filter_unprocessed, write_checkpoint
+    from ..operators.checkpoint import filter_unprocessed
 
     spark = get_spark(master=args.master)
     t0 = time.time()
@@ -101,10 +173,8 @@ def main(argv=None):
         # HDFS/S3 URI in the deployment this job is designed for,
         # where os.path.exists would silently disable the
         # no_metadata rule
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(meta_path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(hpath):
+        fs, Path = hadoop_fs(spark, meta_path)
+        if fs.exists(Path(meta_path)):
             meta = spark.read.parquet(meta_path)
     else:
         from ..sources.derived import conv_meta_sql
@@ -123,43 +193,7 @@ def main(argv=None):
         skip_debug=not args.no_skip_debug,
         impl=args.impl,
         meta=meta,
-    ).withColumn("src_partition", F.spark_partition_id())
-
-    # The reference routes per file into 3 indices inside one pass
-    # (send_to_es, logsender.py:474-489). Spark translation that
-    # survives scale: ONE write job with partitionBy(sink, event_date)
-    # — a single shuffle keyed on the table partition scheme, files
-    # track (sink x date) not tasks x dates, and no wide-row cache is
-    # ever built (persisting the parsed DF measured 2x the cost of
-    # writing it). Aggregates/metrics/checkpoint then run over the
-    # just-written columnar data with sink/date pruning for free.
-    # Writes are APPEND-mode batches tagged with batch_id; the conv
-    # checkpoint makes re-runs skip processed convs (at-least-once
-    # like the reference's remove-dir-on-success, logsender.py:550-560;
-    # a real Iceberg sink upgrades this to exactly-once snapshots).
-    batch_id = args.batch_ts.replace(" ", "T").replace(":", "-")
-    sinks_dir = os.path.join(args.output_dir, "sinks")
-    routed = (
-        routed.withColumn("batch_id", F.lit(batch_id))
-        .withColumn("event_date", F.to_date("filled_ts"))
-        # sink docs keep `message`, not the raw line (the reference's
-        # ES documents likewise store the split message, doc_iter
-        # logsender.py:416-428); dropping text+ts cuts the fan-out
-        # exchange + file bytes ~40%. prior_ts_count is routing
-        # scratch — never a sink column.
-        .drop("text", "ts", "prior_ts_count")
     )
-    counts = {}
-    # Row count of THIS write comes from an Observation on the write
-    # job itself — no separate count pass over the anti-joined input.
-    # A fully-checkpointed input observes 0 rows and must stay a
-    # no-op: in particular it must NOT re-read this batch_id's
-    # previous rows and re-append aggregates.
-    from pyspark.sql import Observation
-
-    obs = Observation("routed_rows")
-    phases = {}
-    t_w = time.time()
     if args.no_write:
         # warmup on a 2% sample: pays the one-time Janino codegen /
         # JIT compile (~8-10 s, identical generated classes) outside
@@ -169,8 +203,7 @@ def main(argv=None):
         routed.sample(0.02, seed=7).groupBy("sink").agg(
             F.count(F.lit(1))
         ).collect()
-        t0 = time.time()
-        t_w = time.time()
+        t0 = t_w = time.time()
         counts = {
             r["sink"]: r["cnt"]
             for r in routed.groupBy("sink")
@@ -178,73 +211,13 @@ def main(argv=None):
             .collect()
         }
         n_rows = sum(counts.values())
-        phases["fanout_write_sec"] = round(time.time() - t_w, 2)
-        wall = time.time() - t0
-        summary = {
-            "rows": n_rows,
-            "skipped_already_processed": already,
-            "sinks": counts,
-            "wall_sec": round(wall, 2),
-            "rows_per_sec": round(n_rows / wall, 1) if wall > 0 else None,
-            "impl": args.impl,
-            "no_write": True,
-            **phases,
-        }
-        print(json.dumps(summary))
-        if args.summary_json:
-            with open(args.summary_json, "w") as f:
-                json.dump(summary, f)
-        spark.stop()
-        return 0
-    w = routed.observe(obs, F.count(F.lit(1)).alias("n"))
-    if args.write_strategy == "repartition":
-        w = w.repartition(F.col("sink"), F.col("event_date"))
-    elif args.write_strategy == "salted":
-        w = w.repartition(
-            F.col("sink"),
-            F.col("event_date"),
-            # pmod, not %: xxhash64 is signed, and negative
-            # remainders would double the salt cells to 2*salt-1
-            F.pmod(F.xxhash64("conv_id"), args.write_salt).alias("_salt"),
+        phases = {"no_write": True,
+                  "fanout_write_sec": round(time.time() - t_w, 2)}
+    else:
+        batch_id = args.batch_ts.replace(" ", "T").replace(":", "-")
+        n_rows, counts, phases = write_batch(
+            spark, routed, args.output_dir, batch_id
         )
-    else:  # direct: sort-free dynamic-partition write, no exchange
-        spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", "160")
-    # sink DDL seam (sinks.TableSink): ParquetDirSink here; a real
-    # Iceberg catalog slots in as IcebergTableSink without touching
-    # the plan (create_indices analog, logsender.py:563-618)
-    from ..sinks import ParquetDirSink
-
-    table = ParquetDirSink(sinks_dir)
-    table.ensure(spark)
-    table.append(w)
-    n_rows = obs.get["n"]
-    phases["fanout_write_sec"] = round(time.time() - t_w, 2)
-    t_w = time.time()
-    if n_rows > 0:
-        written = spark.read.parquet(sinks_dir).filter(
-            F.col("batch_id") == batch_id
-        )
-        hourly_agg(written).withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("append").parquet(
-            os.path.join(args.output_dir, "agg_hourly")
-        )
-        # per-partition lineage/throughput metrics
-        # (reference analog: Prometheus per-job gauges,
-        # logscraper.py:295-304)
-        metrics = written.groupBy("src_partition", "sink").agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.countDistinct("conv_id").alias("convs"),
-        )
-        metrics.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(os.path.join(args.output_dir, "metrics"))
-        write_checkpoint(written, ckpt_dir)
-        counts = {
-            r["sink"]: r["cnt"] for r in sink_counts(written).collect()
-        }
-
-    phases["post_write_sec"] = round(time.time() - t_w, 2)
     wall = time.time() - t0
     summary = {
         "rows": n_rows,

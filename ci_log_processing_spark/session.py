@@ -77,3 +77,11 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path class) for `path`'s scheme: one code path for
+    local paths and file://, hdfs:// and s3a:// URIs."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    conf = spark._jsc.hadoopConfiguration()
+    return Path(path).getFileSystem(conf), Path

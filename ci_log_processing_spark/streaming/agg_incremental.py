@@ -32,8 +32,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.pipeline import parse_transcripts
+from ..session import hadoop_fs
 from .follow import TRANSCRIPT_SCHEMA
-from .partials import drain, hadoop_fs, read_partials, write_partial
+from .partials import drain, read_partials, write_partial
 
 _KEYS = ["severity", "window_start"]
 _SCHEMA = "severity string, window_start timestamp, cnt long"

@@ -45,7 +45,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .partials import drain, hadoop_fs
+from ..session import hadoop_fs
+from .partials import drain
 
 CDC_STREAM_SCHEMA = (
     "doc_id long, op string, seq long, text string"

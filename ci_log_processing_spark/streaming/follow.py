@@ -3,21 +3,28 @@
 logsender.py:683-687: run(); sleep(wait)) as Structured Streaming.
 
 Design: readStream over the transcripts table directory +
-foreachBatch running the SAME batch pipeline per micro-batch.
+foreachBatch running the job's batch path per micro-batch:
+filter_unprocessed -> full_pipeline -> plans.job.write_batch.
 foreachBatch (not a pure streaming DAG) because the forward-fill
 window is conversation-ordered — inside a micro-batch the batch
 planner handles it, mirroring the reference's treat-each-ready-dir-
 as-a-unit semantics (a conversation's turns arrive together, the
 way a build dir becomes "ready" all at once, logsender.py:175-198).
 
+Output: the job's layout, written by the same code —
+<out>/sinks/sink=<s>/event_date=<d>/ with the job's sink columns
+(batch_id is the micro-batch id as a string), <out>/agg_hourly,
+<out>/metrics and the conv manifest <out>/checkpoint.
+
 Trigger:
   * availableNow=True — drain what exists, then stop (the batch
     re-run analog; used in tests);
   * processingTime=Ns  — the literal --follow loop.
 
-Checkpointing: Spark's own streaming checkpoint (offset tracking)
-+ our conv-manifest checkpoint both apply; a re-run neither
-re-reads files nor re-emits convs.
+Checkpointing: Spark's own streaming checkpoint (<out>/_stream_ckpt,
+offset tracking) + the job's conv-manifest checkpoint both apply: a
+re-run re-reads no file, and a conversation already in the manifest
+— e.g. re-delivered in a later file — is skipped, not re-emitted.
 """
 
 from __future__ import annotations
@@ -25,10 +32,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from ..operators.aggregate import hourly_agg
-from ..operators.route import SINKS
+from ..operators.checkpoint import filter_unprocessed
+from ..plans.job import write_batch
 from ..plans.pipeline import DEFAULT_BATCH_TS, DEFAULT_REF_YEAR, full_pipeline
 
 TRANSCRIPT_SCHEMA = (
@@ -55,33 +61,18 @@ def run_follow(
     """
 
     def process_batch(batch_df, batch_id: int):
-        if batch_df.isEmpty():
-            return
+        fresh, _ = filter_unprocessed(
+            spark, batch_df, os.path.join(output_dir, "checkpoint")
+        )
         routed = full_pipeline(
-            batch_df,
+            fresh,
             spark,
             batch_ts=batch_ts,
             ref_year=ref_year,
             impl=impl,
             meta=meta,
-        ).withColumn("batch_id", F.lit(batch_id))
-        routed = routed.persist()
-        try:
-            for sink in SINKS:
-                (
-                    routed.filter(F.col("sink") == sink)
-                    .withColumn("event_date", F.to_date("filled_ts"))
-                    .write.mode("append")
-                    .partitionBy("event_date")
-                    .parquet(os.path.join(output_dir, "sinks", sink))
-                )
-            hourly_agg(routed).withColumn(
-                "batch_id", F.lit(batch_id)
-            ).write.mode("append").parquet(
-                os.path.join(output_dir, "agg_hourly")
-            )
-        finally:
-            routed.unpersist()
+        )
+        write_batch(spark, routed, output_dir, str(batch_id))
 
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)

@@ -35,14 +35,9 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import hadoop_fs
+
 _BATCH_DIR = re.compile(r"b(\d+)")
-
-
-def hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path class) for `path`'s scheme."""
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    conf = spark._jsc.hadoopConfiguration()
-    return Path(path).getFileSystem(conf), Path
 
 
 def drain(

@@ -36,33 +36,44 @@ def test_iceberg_ddl_golden():
     assert "PARTITIONED BY (sink, days(event_date))" in ddl
 
 
-def test_iceberg_ddl_matches_job_schema(spark):
-    # the DDL column set must equal what plans/job.py actually
-    # appends, or the Iceberg path fails on its first real write
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from ci_log_processing_spark.plans.pipeline import full_pipeline
-
+def _one_turn(spark):
     t = spark.createDataFrame(
         [("c1", 0, "assistant", "2024-01-01 00:00:00.5 | INFO x", None,
           dt.datetime(2024, 1, 1))],
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp",
     )
-    meta = spark.createDataFrame([("c1",)], "conv_id string")
-    routed = (
-        full_pipeline(t, spark, meta=meta)
-        .withColumn("src_partition", F.spark_partition_id())
-        .withColumn("batch_id", F.lit("b"))
-        .withColumn("event_date", F.to_date("filled_ts"))
-        .drop("text", "ts", "prior_ts_count")
-    )
+    return t, spark.createDataFrame([("c1",)], "conv_id string")
+
+
+def _assert_ddl_matches(spark, sinks_dir):
+    back = spark.read.parquet(sinks_dir)
     ddl_cols = {n for n, _t in IcebergTableSink.COLUMNS}
-    assert ddl_cols == set(routed.columns), (
-        ddl_cols ^ set(routed.columns)
-    )
+    assert ddl_cols == set(back.columns), ddl_cols ^ set(back.columns)
+
+
+def test_iceberg_ddl_matches_job_schema(spark, tmp_path):
+    # the DDL column set must equal what plans/job.py actually
+    # appends, or the Iceberg path fails on its first real write
+    from ci_log_processing_spark.plans.job import write_batch
+    from ci_log_processing_spark.plans.pipeline import full_pipeline
+
+    t, meta = _one_turn(spark)
+    out = str(tmp_path / "out")
+    write_batch(spark, full_pipeline(t, spark, meta=meta), out, "b")
+    _assert_ddl_matches(spark, str(tmp_path / "out" / "sinks"))
+
+
+def test_iceberg_ddl_matches_follow_schema(spark, tmp_path):
+    # follow mode appends through the same batch path, so the same
+    # DDL must take its output
+    from ci_log_processing_spark.streaming.follow import run_follow
+
+    t, meta = _one_turn(spark)
+    in_dir = str(tmp_path / "in")
+    t.write.parquet(in_dir)
+    run_follow(spark, in_dir, str(tmp_path / "out"), meta=meta)
+    _assert_ddl_matches(spark, str(tmp_path / "out" / "sinks"))
 
 
 def test_iceberg_unavailable_raises_with_ddl(spark):

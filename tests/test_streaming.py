@@ -14,6 +14,14 @@ from ci_log_processing_spark.streaming.follow import run_follow
 SF = "/root/testdata/sf0.001"
 
 
+def _sink_rows(spark, out_dir):
+    """The job-layout sink table (sinks/sink=<s>/event_date=<d>/)
+    without the write bookkeeping columns."""
+    return spark.read.parquet(os.path.join(out_dir, "sinks")).drop(
+        "batch_id", "src_partition"
+    )
+
+
 def test_follow_matches_batch(spark, tmp_path):
     t = load_transcripts(spark, SF)
     in_dir = str(tmp_path / "transcripts")
@@ -25,23 +33,48 @@ def test_follow_matches_batch(spark, tmp_path):
 
     run_follow(spark, in_dir, out_dir)
 
-    batch_counts = {
-        r["sink"]: r["cnt"]
-        for r in full_pipeline(t, spark)
-        .groupBy("sink")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    for sink, expected in batch_counts.items():
-        path = os.path.join(out_dir, "sinks", sink)
-        got = spark.read.parquet(path).count()
-        assert got == expected, (sink, got, expected)
+    got = _sink_rows(spark, out_dir)
+    want = (
+        full_pipeline(t, spark)
+        .withColumn("event_date", F.to_date("filled_ts"))
+        .select(*got.columns)
+    )
+    n = want.count()
+    assert n > 0 and got.count() == n, (got.count(), n)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
 
     # restart with the same checkpoint: no new files -> no new rows
     run_follow(spark, in_dir, out_dir)
-    for sink, expected in batch_counts.items():
-        got = spark.read.parquet(os.path.join(out_dir, "sinks", sink)).count()
-        assert got == expected, ("after-restart", sink, got, expected)
+    assert _sink_rows(spark, out_dir).count() == n
+
+
+def test_follow_skips_redelivered_conversation(spark, tmp_path):
+    """A conversation re-delivered in a later file is in the conv
+    manifest by then, so follow skips it, exactly as a job re-run
+    does (no duplicate (conv_id, turn_idx), <out>/checkpoint kept)."""
+    t = load_transcripts(spark, SF)
+    convs = [
+        r["conv_id"]
+        for r in t.select("conv_id").distinct().orderBy("conv_id").limit(3)
+        .collect()
+    ]
+    first = t.filter(F.col("conv_id").isin(convs))
+    in_dir = str(tmp_path / "transcripts")
+    out_dir = str(tmp_path / "out")
+    first.coalesce(1).write.parquet(in_dir)
+    run_follow(spark, in_dir, out_dir)
+    n = _sink_rows(spark, out_dir).count()
+    assert n == full_pipeline(first, spark).count() > 0
+
+    first.filter(F.col("conv_id") == convs[0]).coalesce(1).write.mode(
+        "append"
+    ).parquet(in_dir)
+    run_follow(spark, in_dir, out_dir)
+    got = _sink_rows(spark, out_dir)
+    assert got.count() == n
+    assert got.select("conv_id", "turn_idx").distinct().count() == n
+    assert os.path.isdir(os.path.join(out_dir, "checkpoint"))
 
 
 def test_watermarked_window_counts(spark, tmp_path):

@@ -173,7 +173,7 @@ def build_catalog() -> str:
             loc = "—"
         elif g.get("hash_match"):
             loc = "PASS"
-        elif g.get("err") and "rows-only" in str(g.get("err")):
+        elif g.get("rows_only"):
             loc = f"rows-only ({g.get('spark_rows')})"
         else:
             loc = "FAIL"
